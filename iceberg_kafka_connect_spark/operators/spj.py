@@ -77,7 +77,7 @@ def _files_by_bucket(
     out: dict[int, list[dict]] = {}
     null_files: list[dict] = []
     for f in data_files:
-        raw = partition_dir_value(f["path"], pf.name)
+        raw = partition_dir_value(f["path"], pf.name, f.get("base"))
         if raw is None:
             raise ValueError(
                 f"data file {f['path']!r} predates the bucket spec "

@@ -9,6 +9,7 @@ joins or row-at-a-time Python evals in hot paths.
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 from pyspark.sql import DataFrame
@@ -36,3 +37,11 @@ def assert_plan(
         assert token in plan, f"plan missing {token!r}:\n{plan}"
     for token in absent or []:
         assert token not in plan, f"plan unexpectedly contains {token!r}:\n{plan}"
+
+
+def scan_count(df: DataFrame, fmt: str = "parquet") -> int:
+    """Number of ``fmt`` file-source scans in ``df``'s optimized logical
+    plan. Each one is its own file listing, planning and scan, so a table
+    read should need one per write schema, not one per commit."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return len(re.findall(rf"Relation \[[^\]]*\] {re.escape(fmt)}\b", plan))

@@ -96,6 +96,7 @@ import uuid
 from pyspark.sql import types as T
 
 from .avro_io import MAGIC, SYNC_SIZE
+from .spec import partition_segments
 
 
 class IcebergExportUnsupported(Exception):
@@ -707,16 +708,17 @@ def _time_transform_parser(transform: str):
     return parse
 
 
-def _partition_tuple(rel_path: str, parsers: dict) -> dict:
-    """Parse ``name=value`` segments of a data file's relative path into the
-    manifest's typed partition tuple (hive null marker -> None)."""
+def _partition_tuple(fentry: dict, parsers: dict) -> dict:
+    """Parse the ``name=value`` partition directories of a data-file entry
+    (``spec.partition_segments``) into the manifest's typed partition
+    tuple (hive null marker -> None)."""
     from urllib.parse import unquote
 
-    seen = {}
-    for seg in rel_path.split(os.sep):
-        if "=" in seg:
-            k, _, v = seg.partition("=")
-            seen[k] = unquote(v)
+    rel_path = fentry["path"]
+    seen = {
+        k: unquote(v)
+        for k, v in partition_segments(rel_path, fentry.get("base"))
+    }
     out = {}
     for dir_name, (field, parse) in parsers.items():
         if dir_name not in seen:
@@ -1232,7 +1234,7 @@ def export_iceberg_metadata(
         _PF.from_json(d).name for hist in spec_history for d in hist
     }
 
-    def _tuple_and_spec(rel_path: str) -> tuple[dict, int, int]:
+    def _tuple_and_spec(fentry: dict) -> tuple[dict, int, int]:
         """(partition tuple, spec id, plan flag) for a data file.
 
         A plan claims a file only when its parser dirs EXACTLY equal the
@@ -1244,22 +1246,20 @@ def export_iceberg_metadata(
         dir sets across generations — prefer the current spec, then the
         newest retired."""
         present = frozenset(
-            seg.split("=", 1)[0]
-            for seg in rel_path.split(os.sep)
-            if "=" in seg
+            k for k, _ in partition_segments(fentry["path"], fentry.get("base"))
         ) & frozenset(known_dirs)
         if present == cur_dirs:
-            return _partition_tuple(rel_path, part_parsers), 0, 0
+            return _partition_tuple(fentry, part_parsers), 0, 0
         for hid, _sj, _av, h_parsers, h_dirs in hist_plans:
             if present == h_dirs:
                 used_hist_ids.add(hid)
-                return _partition_tuple(rel_path, h_parsers), hid, 1
+                return _partition_tuple(fentry, h_parsers), hid, 1
         # no generation matches (typically: the file's spec referenced a
         # since-dropped column, so its plan was skipped) — fail with the
         # current spec's compact() message rather than mis-filing it
-        _partition_tuple(rel_path, part_parsers)
+        _partition_tuple(fentry, part_parsers)
         raise IcebergExportUnsupported(
-            f"data file {rel_path!r} matches no exportable partition "
+            f"data file {fentry['path']!r} matches no exportable partition "
             "spec generation — compact() to rewrite"
         )
     def _rows_of(fentry: dict, path: str) -> int:
@@ -1374,9 +1374,7 @@ def export_iceberg_metadata(
             # incremental consumers (changelog readers, streaming scans)
             # take each snapshot's ADDED set — every-file-ADDED in every
             # historical snapshot would double-count rows downstream
-            part_tuple, part_spec_id, _plan_idx = _tuple_and_spec(
-                fentry["path"]
-            )
+            part_tuple, part_spec_id, _plan_idx = _tuple_and_spec(fentry)
             entry = {
                 "status": 1 if fseq == seq else 0,
                 "snapshot_id": sid if fseq == seq else seq_to_int.get(fseq, sid),

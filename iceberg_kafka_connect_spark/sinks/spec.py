@@ -215,15 +215,50 @@ def parse_partition_spec(spec: list[str] | str | None) -> list[PartitionField]:
 HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
-def partition_dir_value(path: str, field_name: str) -> str | None:
+# Each commit writes its files under ``<root>/{data,deletes}/_commit=<uuid>``
+# (the entry's recorded ``base``). The directory is hive-shaped so one Spark
+# scan rooted at ``data/`` can read many commits at once and see the commit
+# id as a partition column; it is NOT a table partition.
+COMMIT_DIR_KEY = "_commit"
+
+
+def partition_segments(
+    path: str, base: str | None = None
+) -> list[tuple[str, str]]:
+    """Raw (name, value) pairs of the hive-style partition directories of
+    the file at ``path``, outermost first. Only segments BELOW ``base``
+    (the entry's write directory) count: the commit directory and any
+    ``=`` in the table root above it are not partitions. A file directly
+    in a base that is not a commit dir (imported entries record each
+    file's own directory as ``base``), or an entry without one, parses
+    every directory segment but the reserved commit key. The ONE parser
+    of the directory-name contract — partition listings, partition
+    statistics, export tuples, bucket pruning and the storage-partitioned
+    join all resolve through it."""
+    rel = path
+    if base:
+        base = base.rstrip(os.sep)
+        if path.startswith(base + os.sep):
+            below = path[len(base) + 1 :]
+            if os.sep in below or os.path.basename(base).startswith(
+                COMMIT_DIR_KEY + "="
+            ):
+                rel = below
+    out = []
+    for seg in rel.split(os.sep)[:-1]:
+        name, eq, value = seg.partition("=")
+        if eq and name != COMMIT_DIR_KEY:
+            out.append((name, value))
+    return out
+
+
+def partition_dir_value(
+    path: str, field_name: str, base: str | None = None
+) -> str | None:
     """The raw recorded value of the ``field_name=`` partition directory
-    embedded in ``path``, or None when the path has no such directory
-    (file written before the spec existed). The ONE parser of the
-    directory-name contract — table-scan bucket pruning and the
-    storage-partitioned join both resolve through it, so the contract
-    can't drift between them."""
-    seg = field_name + "="
-    for part in path.split(os.sep):
-        if part.startswith(seg):
-            return part[len(seg) :]
+    of the file at ``path`` (see ``partition_segments``), or None when the
+    path has no such directory (file written before the spec existed)."""
+    for name, value in partition_segments(path, base):
+        if name == field_name:
+            return value
     return None
